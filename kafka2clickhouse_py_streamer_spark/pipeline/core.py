@@ -18,31 +18,19 @@ Spark-first — no code is translated):
   (main.py:302).
 
 Architecture: P1+P2 need per-field JSON *type* checking — "is 5 vs
-'5'" — i.e. the raw token's JSON class. Two implementations
-(``SPARK_GRAFT_VALIDATOR``):
+'5'" — i.e. the raw token's JSON class. That is ONE Arrow-batched
+pandas UDF per batch over the raw value (:func:`tag_errors`); at
+100 TB the cost is one Arrow round-trip per input row and everything
+downstream is JVM. (A Spark 4 VariantType form of the same checks
+measured ~30x slower at 1M rows, SCALE.md.)
 
-- ``pandas`` (default): ONE Arrow-batched pandas UDF per batch over
-  the raw value — the sanctioned Python path. At 100 TB the cost is
-  one Arrow round-trip per input row; everything downstream is JVM.
-- ``jvm`` (opt-in, NEGATIVE RESULT for now): Spark 4's VariantType
-  exposes exactly the token class (``try_parse_json`` →
-  ``variant_get`` + ``schema_of_variant``) and the semantics are
-  proven equal to the pandas form (differential + parser-edge tests,
-  RFC-strictness notes on ``_tag_errors_jvm``), but the measured cost
-  is ~30x the pandas UDF at 1M rows (46 s vs 1.4-3.3 s; a layered
-  one-eval-per-field variant was ~100x) — variant expression
-  evaluation dominates regardless of how few variant ops the plan
-  holds. Kept as the semantics reference and for re-testing on later
-  Spark versions; do not default to it until that inverts.
-
-P3 is pure Column expressions — whole-stage-codegen, no Python.
+P3 is pure Column expressions — whole-stage-codegen, no Python —
+built by :func:`cast_valid`, the one plan both the batch API
+(:func:`process_batch`) and the streaming shell
+(``PipelineJob._plan_valid``) run.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import re
 
 import pandas as pd
 
@@ -50,11 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSchema
@@ -62,31 +48,6 @@ from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSch
 # Marker distinguishing "drop silently" (reference main.py:516-520) from
 # "route to DLQ with an error" inside the single validation UDF.
 _DROP = "\x00DROP"
-
-
-def _json_class_type(meta: ColumnMeta):
-    """Spark type used to *receive* the raw JSON value before P3 casts it.
-
-    Mirrors ch_type_to_json_schema (main.py:62-91): integers arrive as
-    JSON ints (LongType is wide enough to receive any sane input; the
-    UInt64 sentinel path widens later in P3), numbers as doubles →
-    received as StringType so P3's try_cast sees the exact token (Spark's
-    from_json would round-trip doubles fine, but strings are uniform and
-    let P3 own ALL casting), dates as strings, enums as string-or-int →
-    StringType (Jackson renders numeric tokens as their text).
-    """
-    return StringType()
-
-
-def receiving_schema(schema: TableSchema) -> StructType:
-    """All-string receiving schema: from_json extracts raw tokens, P3
-    casts. A number arriving as 1.5 parses to "1.5"; explicit JSON null
-    parses to SQL NULL; absent keys parse to SQL NULL too — P2 has
-    already split on the present-vs-absent distinction, so P3 can treat
-    both as "use the sentinel default"."""
-    return StructType(
-        [StructField(c.name, _json_class_type(c), True) for c in schema.columns]
-    )
 
 
 def _make_validator(cols: dict[str, str], required: list[str], drop: str):
@@ -134,123 +95,12 @@ def _make_validator(cols: dict[str, str], required: list[str], drop: str):
     return validate_row
 
 
-# JSON class tests over a schema_of_variant() string. Mirrors
-# _make_validator: booleans are BOOLEAN (never integer/number). The
-# integer class needs care because Variant NORMALIZES decimal tokens —
-# "1.0" parses to DECIMAL(1,0), same kind as an int64-overflow integer
-# token ("99999999999999999999" → DECIMAL(20,0)). Python's json gives
-# float for the former (NOT integer) and unbounded int for the latter
-# (integer), so only DECIMAL(p,0) with p ≥ 19 — a precision no in-range
-# int64 token produces — counts as integer. Documented divergences,
-# both beyond any schema here: a ≥19-digit "N.0"-style decimal token
-# classes as integer, and an integer token past 38 digits falls to
-# DOUBLE and is flagged.
-_BIG_INT_DECIMALS = ", ".join(f"'DECIMAL({p},0)'" for p in range(19, 39))
-
-_JSON_CLASS_TEST = {
-    "integer": lambda st: (
-        f"({st} = 'BIGINT' OR {st} IN ({_BIG_INT_DECIMALS}))"
-    ),
-    "number": lambda st: (
-        f"({st} = 'BIGINT' OR {st} = 'DOUBLE' OR {st} LIKE 'DECIMAL%')"
-    ),
-    "enum": lambda st: (
-        f"({st} = 'BIGINT' OR {st} = 'STRING' "
-        f"OR {st} IN ({_BIG_INT_DECIMALS}))"
-    ),
-    "string": lambda st: f"({st} = 'STRING')",
-}
-
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _jvm_error_case(cols: dict[str, str], required: list[str]) -> str:
-    """The validator as ONE SQL CASE over a pre-parsed variant column
-    ``_v`` (emitted as SQL text, not stacked Columns — one parse).
-    First failing check wins, in _make_validator's exact order:
-    required keys first, then per-column class checks. Key-presence
-    semantics proven against VariantType: an ABSENT key makes
-    ``variant_get`` SQL-null, while a present JSON null yields a
-    non-null variant with ``is_variant_null`` = true (valid here — P3
-    fills the sentinel)."""
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    whens = []
-    for req in required:
-        whens.append(
-            f"WHEN variant_get(_v, '$.{req}') IS NULL "
-            f"THEN 'data must contain [''{q(req)}''] properties'"
-        )
-    for name, jtype in cols.items():
-        g = f"variant_get(_v, '$.{name}')"
-        class_ok = _JSON_CLASS_TEST[jtype](f"schema_of_variant({g})")
-        whens.append(
-            f"WHEN {g} IS NOT NULL AND NOT is_variant_null({g}) "
-            f"AND NOT {class_ok} "
-            f"THEN 'data.{q(name)} must be "
-            f"{'string or integer' if jtype == 'enum' else q(jtype)}'"
-        )
-    return "CASE " + " ".join(whens) + " ELSE NULL END"
-
-
-def _tag_errors_jvm(
-    raw_df: DataFrame, schema: TableSchema, value_col: str
-) -> DataFrame:
-    """STRICTNESS: Jackson-based JVM parsers accept trailing garbage
-    ('{"a":1}{junk' parses as the first object), which Python's
-    json.loads rejects — so the message is parsed WRAPPED as
-    ``[value]``: trailing content breaks the array parse, a clean JSON
-    value yields exactly one element, and the object itself is
-    ``$[0]`` of the same single parse. Two RFC 8259 strictness
-    divergences vs the pandas mode (whose json.loads is lenient beyond
-    the RFC): duplicate-key objects and NaN/Infinity number literals
-    are DROPPED here, tolerated there (last-key-wins / float('nan')).
-    Both are invalid JSON per the RFC; pick the pandas mode to ingest
-    producers that emit them."""
-    case_sql = _jvm_error_case(
-        {c.name: c.json_type for c in schema.columns},
-        list(schema.required),
-    )
-    vcol = F.col(value_col)
-    err = (
-        F.when(vcol.isNull() | (F.trim(vcol) == ""), F.lit(_DROP))
-        .when(
-            F.col("_w").isNull()
-            | F.expr("variant_get(_w, '$[1]') IS NOT NULL"),
-            F.lit(_DROP),
-        )
-        .when(
-            # _v SQL-null = the wrapped array is EMPTY: a whitespace-
-            # only message beyond plain spaces ("\t\n" — Spark's trim
-            # only strips 0x20, so the first when missed it) wraps to
-            # '[\t\n]', a valid zero-element array. Same tombstone.
-            F.col("_v").isNull()
-            | F.expr("is_variant_null(_v)")
-            | ~F.expr("schema_of_variant(_v) LIKE 'OBJECT%'"),
-            F.lit(_DROP),
-        )
-        .otherwise(F.expr(case_sql))
-    )
-    return (
-        raw_df.withColumn(
-            "_w",
-            F.expr(
-                f"try_parse_json(concat('[', {value_col}, ']'))"
-            ),
-        )
-        .withColumn("_v", F.expr("variant_get(_w, '$[0]')"))
-        .withColumn("_err", err)
-        .drop("_w", "_v")
-    )
-
-
 def _schema_fingerprint(schema: TableSchema) -> tuple:
-    """Value-identity key for per-schema plan caches: two TableSchema
-    objects with the same columns/required produce identical plan
-    fragments, and a drift-refetched schema with different content gets
-    a different key (so invalidate_schema naturally misses the cache)."""
+    """Value-identity key for the per-schema compile cache: two
+    TableSchema objects with the same columns/required produce identical
+    plan fragments, and a drift-refetched schema with different content
+    gets a different key (so invalidate_schema naturally misses the
+    cache)."""
     return (
         tuple(
             (c.name, c.ch_type, c.spark_type.simpleString(),
@@ -259,101 +109,6 @@ def _schema_fingerprint(schema: TableSchema) -> tuple:
         ),
         tuple(schema.required),
     )
-
-
-# (applicationId, fingerprint) -> pandas-UDF callable. The streaming
-# shell calls tag_errors once per TRIGGER; without this cache every
-# micro-batch re-pickles the validator closure and registers a fresh
-# JVM UDF — pure driver-side fixed cost at high trigger rates
-# (THROUGHPUT_r08's parity_1p regime). applicationId scopes the cache
-# to one SparkContext so a restarted session can't see stale JVM refs.
-_VALIDATOR_UDF_CACHE: dict[tuple, object] = {}
-
-
-def _tag_errors_pandas(
-    raw_df: DataFrame, schema: TableSchema, value_col: str
-) -> DataFrame:
-    key = (
-        raw_df.sparkSession.sparkContext.applicationId,
-        _schema_fingerprint(schema),
-    )
-    _validate = _VALIDATOR_UDF_CACHE.get(key)
-    if _validate is None:
-        validate_row = _make_validator(
-            {c.name: c.json_type for c in schema.columns},
-            list(schema.required),
-            _DROP,
-        )
-
-        @F.pandas_udf(StringType())
-        def _validate(vals: pd.Series) -> pd.Series:
-            return vals.map(validate_row)
-
-        if len(_VALIDATOR_UDF_CACHE) > 64:  # bound: schemas are few
-            _VALIDATOR_UDF_CACHE.clear()
-        _VALIDATOR_UDF_CACHE[key] = _validate
-
-    return raw_df.withColumn("_err", _validate(F.col(value_col)))
-
-
-def tag_errors(
-    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
-) -> DataFrame:
-    """P1+P2 tagging stage: adds an ``_err`` column (NULL = valid, the
-    drop marker, or the validation error).
-
-    ``SPARK_GRAFT_VALIDATOR`` picks the implementation: ``pandas``
-    (default — the Arrow-batched UDF; callers that consume both splits
-    more than once should persist this frame so the UDF runs once per
-    batch) or ``jvm`` (the VariantType CASE expression — semantics
-    twin-tested equal, but a measured ~30x SLOWDOWN on current Spark,
-    see the module docstring; opt-in only). A sink column name that is
-    not a plain identifier (can't be embedded in a JSON path literal)
-    falls back to the pandas form automatically."""
-    mode = os.environ.get("SPARK_GRAFT_VALIDATOR", "pandas")
-    # guard BOTH name sources the CASE text interpolates raw: column
-    # names (JSON path + error message) and the configured required
-    # keys (REQUIRED_COLUMNS env — a quote/dot/$ would make an invalid
-    # path literal or wrong error string, not a clean fallback)
-    if mode == "jvm" and all(
-        _IDENT.match(n)
-        for n in [*(c.name for c in schema.columns), *schema.required]
-    ):
-        return _tag_errors_jvm(raw_df, schema, value_col)
-    if mode not in ("jvm", "pandas"):  # pragma: no cover - config error
-        raise ValueError(f"unknown validator mode: {mode!r}")
-    return _tag_errors_pandas(raw_df, schema, value_col)
-
-
-def dlq_condition():
-    """The tagged-frame predicate selecting DLQ rows (valid = NULL
-    ``_err``; drops carry the marker; everything else is an error)."""
-    return F.col("_err").isNotNull() & (F.col("_err") != _DROP)
-
-
-def split_tagged(
-    tagged: DataFrame, value_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """Split a tagged frame into (valid_raw, dlq)."""
-    valid = tagged.filter(F.col("_err").isNull()).drop("_err")
-    dlq = tagged.filter(dlq_condition()).select(
-        F.col(value_col).alias("row"), F.col("_err").alias("error")
-    )
-    return valid, dlq
-
-
-def validate_split(
-    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """P1+P2: split raw JSON messages into (valid_raw, dlq).
-
-    ``valid_raw`` keeps the original message column (P3 parses it);
-    ``dlq`` carries ``row`` (original message text) + ``error`` — the
-    Spark shape of the reference's ``{'row': …, 'error': …}`` records
-    (main.py:227). Empty/whitespace/malformed messages appear in
-    neither (main.py:516-520).
-    """
-    return split_tagged(tag_errors(raw_df, schema, value_col), value_col)
 
 
 # exactly the strings Spark's ANSI string→integral cast accepts:
@@ -377,24 +132,12 @@ _INTEGRAL_TOKEN = r"^[\x00-\x20]*[+-]?[0-9]+[\x00-\x20]*$"
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _cast_expr(
-    meta: ColumnMeta,
-    present: bool,
-    from_string: bool = False,
-    source=None,
-):
-    """P3 for one column (main.py:260-302), as a Column expression.
-
-    ``from_string``: the input column is known to be STRING (the
-    receiving-schema path) — enables the exception-free integral guard,
-    which is only analyzable/meaningful on string input.
-    ``source``: Column holding the raw value (defaults to the meta's
-    own name; the fused streaming shape passes a struct field ref)."""
+def _cast_expr(meta: ColumnMeta, col):
+    """P3 for one column (main.py:260-302), as a Column expression over
+    ``col``, the column's raw token received as STRING (SQL NULL when
+    the key is absent or JSON null — both take the sentinel default,
+    main.py:296-298)."""
     t = meta.spark_type
-    if not present:
-        # missing column → lit(default) (main.py:296-298)
-        return F.lit(meta.default).cast(t).alias(meta.name)
-    col = F.col(meta.name) if source is None else source
     if meta.is_datetime:
         # ''→default; unparseable→null→default (main.py:267-273)
         parsed = F.try_to_timestamp(F.nullif(col, F.lit("")))
@@ -404,11 +147,7 @@ def _cast_expr(
     elif meta.is_string_enum:
         # null → "DEFAULT" (main.py:275-281)
         expr = F.coalesce(col.cast(StringType()), F.lit("DEFAULT"))
-    elif (
-        from_string
-        and meta.json_type == "enum"
-        and t.simpleString() in _INTEGRAL_TYPES
-    ):
+    elif meta.json_type == "enum" and t.simpleString() in _INTEGRAL_TYPES:
         # fail-soft cast with the exception-free miss path
         expr = F.coalesce(
             F.when(col.rlike(_INTEGRAL_TOKEN), col.try_cast(t)),
@@ -420,56 +159,107 @@ def _cast_expr(
     return expr.alias(meta.name)
 
 
-def cast_project(parsed_df: DataFrame, schema: TableSchema) -> DataFrame:
-    """P3: one fused select casting to exactly the sink schema — drops
-    extras, orders columns, fills sentinels (main.py:230-302)."""
-    strings = {n for n, dt in parsed_df.dtypes if dt == "string"}
-    present = set(parsed_df.columns)
-    return parsed_df.select(
-        *[
-            _cast_expr(c, c.name in present, from_string=c.name in strings)
-            for c in schema.columns
-        ]
-    )
+# (applicationId, fingerprint, value_col) -> (validator UDF, parse
+# Column, cast Columns). The streaming shell runs the pipeline once per
+# TRIGGER; without this cache every micro-batch would re-pickle the
+# validator closure, register a fresh JVM UDF and rebuild dozens of
+# Column expressions over py4j — pure driver-side fixed cost at high
+# trigger rates (THROUGHPUT_r08's parity_1p regime). Column objects are
+# unresolved expression trees, reusable across DataFrames.
+# applicationId scopes the cache to one SparkContext so a restarted
+# session can't see stale JVM refs.
+_COMPILED: dict[tuple, tuple] = {}
 
 
-# (applicationId, fingerprint, value_col) -> (from_json Column, cast
-# Columns). Column objects are unresolved expression trees — reusable
-# across DataFrames — but building them crosses py4j dozens of times;
-# the streaming shell would otherwise pay that per trigger.
-_PLAN_FRAG_CACHE: dict[tuple, tuple] = {}
-
-
-def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
-    """Cached (parse Column, cast Columns) for the receiving-schema
-    pipeline shape (every sink column present, received as STRING).
-    ``valid.select(parse.alias('_parsed')).select(*casts)`` ≡
-    from_json + cast_project for this shape — two Dataset ops total
-    (each op is an EAGER analysis pass in Spark; the streaming shell
-    pays this per trigger, so the fused form is also the cheap form).
-    The cast Columns read their input through ``_parsed.<name>`` field
-    refs so the struct is expanded and cast in one projection."""
+def _compiled(spark, schema: TableSchema, value_col: str) -> tuple:
     key = (
         spark.sparkContext.applicationId,
         _schema_fingerprint(schema),
         value_col,
     )
-    frag = _PLAN_FRAG_CACHE.get(key)
-    if frag is None:
-        parse = F.from_json(F.col(value_col), receiving_schema(schema))
+    entry = _COMPILED.get(key)
+    if entry is None:
+        validate_row = _make_validator(
+            {c.name: c.json_type for c in schema.columns},
+            list(schema.required),
+            _DROP,
+        )
+
+        @F.pandas_udf(StringType())
+        def validate(vals: pd.Series) -> pd.Series:
+            return vals.map(validate_row)
+
+        # All-string receiving schema: from_json extracts raw tokens
+        # (a number arriving as 1.5 parses to "1.5"; Jackson renders
+        # numeric enum tokens as their text) and P3 owns ALL casting.
+        # P2 has already split on present-vs-absent, so an absent key
+        # and an explicit JSON null both parse to SQL NULL → sentinel.
+        receiving = StructType(
+            [StructField(c.name, StringType(), True) for c in schema.columns]
+        )
+        parse = F.from_json(F.col(value_col), receiving)
+        # field refs (not "_parsed.*" + col(name)) so a dotted sink
+        # column name like ClickHouse Nested "n.a" resolves as ONE field
         casts = [
-            _cast_expr(
-                c,
-                True,
-                from_string=True,
-                source=F.col("_parsed").getField(c.name),
-            )
+            _cast_expr(c, F.col("_parsed").getField(c.name))
             for c in schema.columns
         ]
-        if len(_PLAN_FRAG_CACHE) > 64:  # bound: schemas are few
-            _PLAN_FRAG_CACHE.clear()
-        _PLAN_FRAG_CACHE[key] = frag = (parse, casts)
-    return frag
+        if len(_COMPILED) > 64:  # bound: schemas are few
+            _COMPILED.clear()
+        _COMPILED[key] = entry = (validate, parse, casts)
+    return entry
+
+
+def tag_errors(
+    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
+) -> DataFrame:
+    """P1+P2 tagging stage: adds an ``_err`` column (NULL = valid, the
+    drop marker, or the validation error) from one Arrow-batched pandas
+    UDF. Callers that consume both splits more than once should persist
+    this frame so the UDF runs once per batch."""
+    validate, _, _ = _compiled(raw_df.sparkSession, schema, value_col)
+    return raw_df.withColumn("_err", validate(F.col(value_col)))
+
+
+def dlq_condition():
+    """The tagged-frame predicate selecting DLQ rows (valid = NULL
+    ``_err``; drops carry the marker; everything else is an error)."""
+    return F.col("_err").isNotNull() & (F.col("_err") != _DROP)
+
+
+def split_tagged(
+    tagged: DataFrame, value_col: str = "value"
+) -> tuple[DataFrame, DataFrame]:
+    """Split a tagged frame into (valid_raw, dlq).
+
+    ``valid_raw`` keeps the original message column; ``dlq`` carries
+    ``row`` (original message text) + ``error`` — the Spark shape of the
+    reference's ``{'row': …, 'error': …}`` records (main.py:227).
+    Empty/whitespace/malformed messages appear in neither
+    (main.py:516-520)."""
+    valid = tagged.filter(F.col("_err").isNull()).drop("_err")
+    dlq = tagged.filter(dlq_condition()).select(
+        F.col(value_col).alias("row"), F.col("_err").alias("error")
+    )
+    return valid, dlq
+
+
+def cast_valid(
+    tagged: DataFrame, schema: TableSchema, value_col: str = "value"
+) -> DataFrame:
+    """P3: the typed valid frame over a tagged frame — filter → parse →
+    cast-expand, one fused select casting to exactly the sink schema
+    (drops extras, orders columns, fills sentinels; main.py:230-302).
+
+    Every Dataset op is an EAGER analysis pass the streaming shell pays
+    per trigger, so this is four ops over the tagged frame."""
+    _, parse, casts = _compiled(tagged.sparkSession, schema, value_col)
+    return (
+        tagged.filter(F.col("_err").isNull())
+        .select(value_col)
+        .select(parse.alias("_parsed"))
+        .select(*casts)
+    )
 
 
 def process_batch(
@@ -478,8 +268,6 @@ def process_batch(
     """The batch-mode pipeline API (reference `process_packets`,
     main.py:394-466, minus the sink/retry shell — see streaming/job.py):
     raw messages → (typed valid frame, DLQ frame)."""
-    valid_raw, dlq = validate_split(raw_df, schema, value_col)
-    parsed = valid_raw.withColumn(
-        "_parsed", F.from_json(F.col(value_col), receiving_schema(schema))
-    ).select("_parsed.*")
-    return cast_project(parsed, schema), dlq
+    tagged = tag_errors(raw_df, schema, value_col)
+    _, dlq = split_tagged(tagged, value_col)
+    return cast_valid(tagged, schema, value_col), dlq

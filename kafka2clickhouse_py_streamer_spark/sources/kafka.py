@@ -38,7 +38,7 @@ def kafka_stream(
     pins validate/cast to as many cores as the topic has partitions;
     with ``minPartitions`` the split happens at the broker fetch, no
     local shuffle needed, and ``PipelineJob``'s shuffle fan-out
-    (``SPARK_GRAFT_BATCH_PARTS``) sees a wide-enough batch and becomes
+    (``PipelineJob._fan_out``) sees a wide-enough batch and becomes
     a no-op. Defaults to None (Spark's 1:1 partition mapping)."""
     reader = (
         spark.readStream.format("kafka")

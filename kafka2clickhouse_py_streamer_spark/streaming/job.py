@@ -25,6 +25,14 @@ The sink is a plain callable — no Catalyst extension needed (SURVEY.md
 §4). A ClickHouse-compatible deployment passes a JDBC writer with the
 async-insert URL settings (main.py:329-335); tests pass in-memory
 writers.
+
+Each trigger runs one fixed path: fan a narrow batch out to
+min(defaultParallelism, 8) partitions (``_fan_out``), tag and persist
+it, count, then the ``pipeline.core.cast_valid`` plan to the sink.
+``start`` turns AQE and cache compression off for the ingest session.
+The one ingest option is ``SPARK_GRAFT_DLQ_OVERLAP=off``, which trades
+the overlapped DLQ write for the reference's strict insert-then-DLQ
+order (``_run_sequential``).
 """
 
 from __future__ import annotations
@@ -386,21 +394,11 @@ class PipelineJob:
         buys ~8x on the compute; rows have no order semantics here
         (the sink is set-oriented; DLQ rows carry their own payload).
 
-        ``SPARK_GRAFT_BATCH_PARTS``: target partition count; ``0``
-        disables; unset → min(defaultParallelism, 8). Batches already
-        at least that wide are left alone. The explicit N keeps AQE
-        from coalescing the tiny exchange back to one partition."""
-        raw = os.environ.get("SPARK_GRAFT_BATCH_PARTS", "")
-        if raw == "0":
-            return batch_df
-        try:
-            target = int(raw) if raw else 0
-        except ValueError:  # pragma: no cover - config error
-            raise ValueError(f"bad SPARK_GRAFT_BATCH_PARTS: {raw!r}")
-        if target <= 0:
-            target = min(
-                batch_df.sparkSession.sparkContext.defaultParallelism, 8
-            )
+        The target is min(defaultParallelism, 8) partitions; batches
+        already at least that wide are left alone. The explicit N
+        keeps AQE from coalescing the tiny exchange back to one
+        partition."""
+        target = min(batch_df.sparkSession.sparkContext.defaultParallelism, 8)
         if batch_df.rdd.getNumPartitions() >= target:
             return batch_df
         return batch_df.repartition(target)
@@ -418,28 +416,15 @@ class PipelineJob:
         return tag_errors(batch_df, schema, self._value_col).persist()
 
     def _plan_valid(self, tagged: DataFrame) -> DataFrame:
-        """Typed valid frame over a tagged frame.
-
-        Every Dataset op here is an EAGER analysis pass the streaming
-        shell pays per trigger, so the pipeline is fused to five ops:
-        tag → filter → project-value → parse → cast-expand. The DLQ
+        """Typed valid frame over a tagged frame — the same
+        ``pipeline.core.cast_valid`` plan the batch API runs. The DLQ
         frame is NOT built here — _write_dlq derives it from the
         tagged cache only when the count job said rows exist."""
         from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            receiving_transform,
+            cast_valid,
         )
 
-        schema = self._get_schema()
-        valid = tagged.filter(F.col("_err").isNull()).select(
-            self._value_col
-        )
-        # parse + cast Columns are cached per (app, schema, value_col):
-        # triggers fire many times a second in the parity regime and
-        # rebuilding the fragments was measurable driver fixed cost
-        parse_col, cast_cols = receiving_transform(
-            tagged.sparkSession, schema, self._value_col
-        )
-        return valid.select(parse_col.alias("_parsed")).select(*cast_cols)
+        return cast_valid(tagged, self._get_schema(), self._value_col)
 
     def start(
         self,
@@ -457,30 +442,18 @@ class PipelineJob:
         deployment shape, with the same checkpoint (and therefore the
         same at-least-once contract) as the continuous service.
 
-        AQE is disabled on the session by default: the foreachBatch
-        body re-runs the same fixed, tiny plan every trigger, and
-        AQE's stage-at-a-time scheduling adds ~200 ms per trigger for
-        re-optimizations that can never change this plan (measured,
-        THROUGHPUT_r09). An ingest service owns its session (the
-        reference is a dedicated process, main.py:468), so the global
-        conf is safe; set ``SPARK_GRAFT_INGEST_AQE=keep`` to leave the
-        session untouched when sharing it with analytic queries."""
-        if os.environ.get("SPARK_GRAFT_INGEST_AQE", "") != "keep":
-            stream_df.sparkSession.conf.set(
-                "spark.sql.adaptive.enabled", "false"
-            )
-        # the per-trigger tagged cache lives for milliseconds and is
-        # read 2-3 times — columnar compression buys nothing there and
-        # costs ~60 ms per 25 k-row build (measured, r9b profile). An
-        # ingest service owns its session (see above); a shared
-        # analytic session sets the knob to keep compression.
-        if (
-            os.environ.get("SPARK_GRAFT_INGEST_CACHE_COMPRESS", "")
-            != "keep"
-        ):
-            stream_df.sparkSession.conf.set(
-                "spark.sql.inMemoryColumnarStorage.compressed", "false"
-            )
+        The ingest service owns its session (the reference is a
+        dedicated process, main.py:468), so two session confs are
+        turned off here. AQE: the foreachBatch body re-runs the same
+        fixed, tiny plan every trigger, and AQE's stage-at-a-time
+        scheduling adds ~200 ms per trigger for re-optimizations that
+        can never change this plan (measured, THROUGHPUT_r09). In-memory
+        columnar compression: the per-trigger tagged cache lives for
+        milliseconds and is read 2-3 times, so compression buys nothing
+        and costs ~60 ms per 25 k-row build (measured, r9b profile)."""
+        conf = stream_df.sparkSession.conf
+        conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
         writer = stream_df.writeStream.foreachBatch(self.run_batch).option(
             "checkpointLocation", checkpoint_dir
         )

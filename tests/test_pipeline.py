@@ -207,3 +207,21 @@ def test_integral_guard_matches_plain_try_cast(spark):
         bad = [(r["s"], r["plain"], r["guarded"]) for r in out
                if r["plain"] != r["guarded"]]
         assert bad == [], (t, bad)
+
+
+def test_dotted_column_name_resolves_as_one_field(spark):
+    """A ClickHouse Nested-style sink column ("n.a") is ONE field of the
+    parsed struct, not a path into a struct "n": the batch API must
+    cast it like any other column, the same way the streaming shell
+    does."""
+    from pyspark.sql import Row
+
+    dotted = build_table_schema(
+        [("device_id", "UInt32"), ("n.a", "UInt8")],
+        required_columns=[],
+        string_enum_columns=[],
+    )
+    raw = spark.createDataFrame([('{"device_id":1,"n.a":3}',)], "value string")
+    valid, dlq = process_batch(raw, dotted)
+    assert valid.collect() == [Row(**{"device_id": 1, "n.a": 3})]
+    assert dlq.collect() == []
