@@ -28,12 +28,13 @@ import tempfile
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# (applicationId, resolved dir) pairs already applied. Keyed on the
-# PAIR so changing SPARK_GRAFT_CHECKPOINT_DIR mid-session takes effect
-# (previously a later change was silently ignored — r7 advice); keyed
-# at all because setCheckpointDir is a context-global mutation we only
-# want to repeat when the target actually changed.
-_CKPT_DIR_SET: set[tuple[str, str]] = set()
+# (applicationId, dir) last passed to setCheckpointDir — one slot, as a
+# process runs one SparkContext at a time. setCheckpointDir is a
+# context-global mutation, so it is repeated exactly when the pair
+# differs from the last one applied: any mid-session change of
+# SPARK_GRAFT_CHECKPOINT_DIR takes effect, a switch back to an earlier
+# dir included.
+_ckpt_applied: tuple[str, str] | None = None
 _MKDTEMP_DIRS: list[str] = []  # default temp dirs, removed at exit
 
 
@@ -85,10 +86,11 @@ def iter_materialize(df: DataFrame, defer: bool = False) -> DataFrame:
             _MKDTEMP_DIRS.append(d)
             atexit.register(shutil.rmtree, d, ignore_errors=True)
         ckpt = _MKDTEMP_DIRS[0]
-    key = (spark.sparkContext.applicationId, ckpt)
-    if key not in _CKPT_DIR_SET:
+    global _ckpt_applied
+    applied = (spark.sparkContext.applicationId, ckpt)
+    if applied != _ckpt_applied:
         spark.sparkContext.setCheckpointDir(ckpt)
-        _CKPT_DIR_SET.add(key)
+        _ckpt_applied = applied
     return df.checkpoint(eager=True)
 
 

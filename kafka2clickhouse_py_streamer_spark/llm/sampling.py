@@ -115,7 +115,7 @@ def _quality_deduped(d: DataFrame) -> DataFrame:
 # _OFFSETS_PERSISTED_CAP registrations we log a loud warning naming
 # the hook instead of corrupting data.
 _OFFSETS_PERSISTED: list[DataFrame] = []
-_OFFSETS_PERSISTED_CAP = int(os.environ.get("SPARK_GRAFT_OFFSETS_CAP", "16"))
+_OFFSETS_PERSISTED_CAP = 16
 
 
 def _session_stopped(frame: DataFrame) -> bool:
@@ -301,8 +301,9 @@ def _two_pass_offsets(
             else StorageLevel.DISK_ONLY_2
         )
         # registered for release_offsets_materializations — the entry
-        # otherwise lives until clearCache/session end; the registry is
-        # capped, evicting (unpersisting) the oldest past the cap
+        # otherwise lives until clearCache/session end; nothing is
+        # auto-evicted (see _OFFSETS_PERSISTED), past the cap a
+        # warning names the release hook
         _register_offsets_persist(ranged)
     else:  # pragma: no cover - config error
         raise ValueError(f"unknown offsets materialization: {mode!r}")

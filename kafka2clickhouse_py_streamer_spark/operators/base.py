@@ -276,13 +276,28 @@ _VERIFY_FIRST = [
     "w03_session_window",
     "w04_enriched_windows",
     "q63_forward_asof",
-    # green-r14
+    # green-r14 but file churned since
     "d12_span_dedup",
     "d13_quality_canonical",
     "d14_lsh_admission",
     "p03_sequence_packing",
     "p08_flatten_mix",
     "p09_incremental_refresh",
+    "p10_budget_select",
+    "p11_curriculum_stages",
+    "p12_temperature_mix",
+    "p13_pps_sample",
+    "s08_ann_recall",
+    "s09_knn_graph",
+    "s10_pagerank",
+    "d15_semdedup",
+    "s11_cluster_quality",
+    "d16_span_scrub",
+    "d01_exact_dedup",
+    "d02_ngram_jaccard",
+    "d03_minhash_lsh",
+    "d04_simhash",
+    "d05_embedding_neardup",
     "w13_histogram_quantiles",
     "t19_heaps_fit",
     "t20_gopher_funnel",
@@ -293,10 +308,6 @@ _VERIFY_FIRST = [
     "t23_pmi_collocations",
     "w16_profile_sketch",
     "t10_char_entropy",
-    "p10_budget_select",
-    "p11_curriculum_stages",
-    "p12_temperature_mix",
-    "p13_pps_sample",
     "q01_pricing_summary",
     "q06_revenue_filter",
     "q12_distinct_agg",
@@ -316,17 +327,6 @@ _VERIFY_FIRST = [
     "q09_running_sum",
     "q10_lag_lead",
     "q29_keep_first",
-    "s08_ann_recall",
-    "s09_knn_graph",
-    "s10_pagerank",
-    "d15_semdedup",
-    "s11_cluster_quality",
-    "d16_span_scrub",
-    "d01_exact_dedup",
-    "d02_ngram_jaccard",
-    "d03_minhash_lsh",
-    "d04_simhash",
-    "d05_embedding_neardup",
 ]
 
 

@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSchema
+from kafka2clickhouse_py_streamer_spark.session import session_cached
 
 # Marker distinguishing "drop silently" (reference main.py:516-520) from
 # "route to DLQ with an error" inside the single validation UDF.
@@ -159,26 +160,17 @@ def _cast_expr(meta: ColumnMeta, col):
     return expr.alias(meta.name)
 
 
-# (applicationId, fingerprint, value_col) -> (validator UDF, parse
-# Column, cast Columns). The streaming shell runs the pipeline once per
-# TRIGGER; without this cache every micro-batch would re-pickle the
+# (fingerprint, value_col) -> (validator UDF, parse Column, cast
+# Columns), session-cached. The streaming shell runs the pipeline once
+# per TRIGGER; without this cache every micro-batch would re-pickle the
 # validator closure, register a fresh JVM UDF and rebuild dozens of
 # Column expressions over py4j — pure driver-side fixed cost at high
 # trigger rates (THROUGHPUT_r08's parity_1p regime). Column objects are
-# unresolved expression trees, reusable across DataFrames.
-# applicationId scopes the cache to one SparkContext so a restarted
-# session can't see stale JVM refs.
-_COMPILED: dict[tuple, tuple] = {}
-
-
+# unresolved expression trees, reusable across DataFrames, and a
+# schema fingerprint fixes every one of them; the session scope keeps
+# a restarted session from seeing stale JVM refs.
 def _compiled(spark, schema: TableSchema, value_col: str) -> tuple:
-    key = (
-        spark.sparkContext.applicationId,
-        _schema_fingerprint(schema),
-        value_col,
-    )
-    entry = _COMPILED.get(key)
-    if entry is None:
+    def build() -> tuple:
         validate_row = _make_validator(
             {c.name: c.json_type for c in schema.columns},
             list(schema.required),
@@ -204,10 +196,13 @@ def _compiled(spark, schema: TableSchema, value_col: str) -> tuple:
             _cast_expr(c, F.col("_parsed").getField(c.name))
             for c in schema.columns
         ]
-        if len(_COMPILED) > 64:  # bound: schemas are few
-            _COMPILED.clear()
-        _COMPILED[key] = entry = (validate, parse, casts)
-    return entry
+        return validate, parse, casts
+
+    return session_cached(
+        spark,
+        ("ingest_compiled", _schema_fingerprint(schema), value_col),
+        build,
+    )
 
 
 def tag_errors(

@@ -16,8 +16,11 @@ the right default on a large cluster:
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -99,3 +102,41 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# The one session-scoped memo: derived substrates (plane counts, trained
+# centroids, the kNN graph, CC labels, the phash table) and per-schema
+# compiled ingest plans, each immutable for one SparkContext's view of
+# its inputs. Keyed on applicationId (unique per context, never
+# recycled), not a Python id(): an id() can be reused after a session
+# is garbage-collected and would serve a dead context's frames. No
+# lock: the one-step get cannot race a clear, and two threads missing
+# the same key at once (streaming triggers run on their own thread)
+# both build the same value, the later insert winning.
+_SESSION_CACHE: dict[tuple, object] = {}
+_SESSION_CACHE_MAX = 64  # past this, the next insert clears the store
+
+
+def session_cached(
+    spark: SparkSession, key: tuple, build: Callable[[], T]
+) -> T:
+    """The value stored under ``(applicationId, *key)``; ``build()``
+    (which never returns None) runs only when that key is missing. A
+    clear (bound or release) only drops references: cached frames are
+    lineage-cut or plain values, so a consumer still holding one keeps
+    a valid object, and the next call rebuilds the same rows."""
+    full = (spark.sparkContext.applicationId, *key)
+    value = _SESSION_CACHE.get(full)
+    if value is None:
+        value = build()
+        if len(_SESSION_CACHE) > _SESSION_CACHE_MAX:
+            _SESSION_CACHE.clear()
+        _SESSION_CACHE[full] = value
+    return value
+
+
+def release_session_cache() -> int:
+    """Drop every session-cache entry (no unpersist); return how many."""
+    n = len(_SESSION_CACHE)
+    _SESSION_CACHE.clear()
+    return n

@@ -261,24 +261,30 @@ def test_iter_materialize_reliable_mode_agrees(spark, monkeypatch, tmp_path):
     # the reliable copies really landed in the configured directory
     import os
 
-    ckpt_files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(tmp_path / "ck")
-        for f in fn
-    ]
-    assert ckpt_files, "reliable mode wrote no checkpoint files"
+    def files(d):
+        return {
+            os.path.join(dp, f) for dp, _dn, fn in os.walk(d) for f in fn
+        }
+
+    assert files(tmp_path / "ck"), "reliable mode wrote no checkpoint files"
 
     # r7 advice: a mid-session change of SPARK_GRAFT_CHECKPOINT_DIR
-    # must take effect (the dir-set memo is keyed on (appId, dir), not
-    # appId alone — previously the second dir was silently ignored)
+    # must take effect (previously the second dir was silently ignored)
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck2"))
     labels2, _ = connected_components(_chain_edges(spark, 32))
     assert {(r.doc_id, r.cluster_id) for r in labels2.collect()} == {
         (i, 0) for i in range(32)
     }
-    ck2_files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(tmp_path / "ck2")
-        for f in fn
-    ]
-    assert ck2_files, "changed checkpoint dir was ignored"
+    assert files(tmp_path / "ck2"), "changed checkpoint dir was ignored"
+
+    # ... and so must a switch BACK to the first dir (a memo of every
+    # (appId, dir) pair ever applied skipped it: files landed in ck2)
+    before = files(tmp_path / "ck")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    labels3, _ = connected_components(_chain_edges(spark, 16))
+    assert {(r.doc_id, r.cluster_id) for r in labels3.collect()} == {
+        (i, 0) for i in range(16)
+    }
+    assert files(tmp_path / "ck") - before, (
+        "switch back to the first checkpoint dir was ignored"
+    )
